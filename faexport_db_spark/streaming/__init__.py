@@ -10,6 +10,12 @@ scripts/ingest/ingestion_job.py:42-43,92-105) and the HTTP push route
 - ``merged_view_stream`` — incremental maintenance of the merged
   current-entity view: each micro-batch recomputes ONLY the touched
   entities and rewrites only their partitions.
+- ``microbatch`` — the one function every micro-batch stream starts
+  through, ``start_batch_stream(source, checkpoint, step, ...)``, and
+  the commit protocol the batch steps share (checkpoint-scoped stream
+  token, per-batch commit markers, store-first appends). The dedup,
+  decontamination, sketch and CDC streams are plain batch functions
+  (``dedup_stream``, ``sketch_stream``, ``cdc_stream``) passed to it.
 - ``events_stream`` — watermarked tumbling-window aggregation over the
   events table (the late-data pattern the reference never needed
   because its merge is order-insensitive by design, README.md:11).
@@ -24,6 +30,7 @@ from faexport_db_spark.streaming.ingest_stream import (  # noqa: F401
 from faexport_db_spark.streaming.merged_view_stream import (  # noqa: F401
     start_incremental_merged_users,
 )
+from faexport_db_spark.streaming.microbatch import start_batch_stream  # noqa: F401
 from faexport_db_spark.streaming.stateful import (  # noqa: F401
     asof_enrich,
     first_seen,

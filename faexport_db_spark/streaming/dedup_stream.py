@@ -30,118 +30,30 @@ re-appends that the maintenance dedup collapses, and re-appended band
 rows are harmless duplicate candidates (the verify stage's per-pair
 groupBy collapses them).
 
-ATOMICITY of the two appends (store + index): a per-batch commit
-marker under ``<index>/_batch_committed/<id>`` is written only after
-BOTH appends succeed, and a batch whose marker exists is skipped
-entirely on re-delivery — the common foreachBatch retry therefore
-re-appends NOTHING. The two crash windows in between converge on
-retry (ADVICE r03): (a) crash after the store append — the fresh
-store rows have no index rows yet, so they produce no candidates, the
-survivor set recomputes identically, and the retry re-appends them
-(exact duplicates, collapsed by maintenance dedup) plus the index
-rows that were missing, closing the stored-but-invisible-to-the-index
-hole; (b) crash after the index append — the batch's own index rows
-match only their own ids (filtered by ``vid != new_id``), so the
-survivor set again recomputes identically and the retry completes the
-marker. Either way the index ends up covering every stored row.
+Every function here is one micro-batch step, started with
+``streaming.microbatch.start_batch_stream``; the per-batch commit
+marker that makes the store + index appends atomic under redelivery is
+specified (the ATOMICITY contract) in ``streaming/microbatch.py``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.errors import AnalysisException
 
-from faexport_db_spark.datamodel.table_format import ParquetFormat, TableFormat
+from faexport_db_spark.datamodel.table_format import DEFAULT_FORMAT, TableFormat
+from faexport_db_spark.streaming.microbatch import (
+    _batch_marker,
+    _read_store_or_none,
+    append_survivors,
+    index_exists,
+    nonempty_cleaned,
+)
 from faexport_db_spark.training.dedup import (
     minhash_band_rows,
     minhash_dedup_pairs,
     minhash_dedup_against_index,
 )
-
-
-def _read_store_or_none(fmt: TableFormat, spark: SparkSession, store_path: str):
-    """The store before the first committed batch reads as ``None``.
-    Only the no-committed-data conditions qualify: a missing path, a
-    directory a crashed first write left with zero parquet footers
-    (``UNABLE_TO_INFER_SCHEMA``), or — manifest strategies — no
-    committed manifest (``FileNotFoundError``). Any other failure
-    propagates so the micro-batch retries; a swallowed transient error
-    here would let duplicates through silently."""
-    try:
-        return fmt.read(spark, store_path)
-    except FileNotFoundError:
-        return None
-    except AnalysisException as exc:
-        if exc.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-            raise
-        return None
-
-
-def _batch_marker(
-    spark: SparkSession,
-    index_path: str,
-    batch_id: int | None,
-    stream_id: str | None,
-):
-    """(committed?, mark_fn) for the per-batch commit marker — see the
-    module docstring's atomicity contract. Batch ids are only unique
-    WITHIN one stream-checkpoint lifetime (a fresh or wiped checkpoint
-    renumbers from 0), so markers are namespaced by ``stream_id`` —
-    the checkpoint-resident token ``_stream_id`` mints.
-    ``batch_id=None`` (direct batch-API callers outside a stream)
-    disables the protocol."""
-    if batch_id is None:
-        return False, lambda: None
-    from faexport_db_spark.operators.hadoop_fs import HadoopFs
-
-    fs = HadoopFs(spark, index_path)
-    ns = stream_id or "direct"
-    ns_dir = f"{index_path.rstrip('/')}/_batch_committed/{ns}"
-    marker = f"{ns_dir}/{batch_id}"
-
-    def mark() -> None:
-        fs.write_text(marker, "")
-        # Markers only matter for RECENT batches (a re-delivery is
-        # always near the checkpoint's tail), so prune the long tail —
-        # without this, one empty file per batch accumulates forever.
-        # Prune every ~50 batches, not every batch: the directory LIST
-        # is an RPC worth amortizing on object stores.
-        if batch_id % 50 == 0:
-            for name in fs.list_names(ns_dir):
-                if name.isdigit() and int(name) < batch_id - 200:
-                    fs.delete(f"{ns_dir}/{name}")
-
-    return fs.exists(marker), mark
-
-
-def _stream_id(spark: SparkSession, checkpoint: str) -> str:
-    """Stream-instance namespace for batch markers: a token file
-    INSIDE the checkpoint directory, created on first use. Batch ids
-    are only meaningful relative to a checkpoint's lifetime — if the
-    checkpoint is wiped, Spark renumbers batches from 0, and a
-    path-derived namespace would then skip brand-new batches 0..N as
-    'already committed' (review finding: silent data loss). The token
-    dies with the checkpoint, so a wiped checkpoint gets a fresh
-    namespace while restarts of a live checkpoint keep their markers."""
-    import uuid
-
-    from faexport_db_spark.operators.hadoop_fs import HadoopFs
-
-    fs = HadoopFs(spark, checkpoint)
-    token_path = f"{checkpoint.rstrip('/')}/_dedup_stream_token"
-    if fs.exists(token_path):
-        token = fs.read_text(token_path).strip()
-        # An empty/truncated token (crash mid-create) must re-mint —
-        # falling through to the shared 'direct' namespace could skip
-        # batches whose ids collide with another degraded stream's
-        # markers (review finding).
-        if token:
-            return token
-    token = uuid.uuid4().hex[:12]
-    fs.mkdirs(checkpoint.rstrip("/"))
-    fs.write_text(token_path, token)
-    return token
 
 
 def dedup_batch_against_store(
@@ -156,7 +68,7 @@ def dedup_batch_against_store(
     threshold: float = 0.6,
     batch_id: int | None = None,
     stream_id: str | None = None,
-    fmt: TableFormat | None = None,
+    fmt: TableFormat = DEFAULT_FORMAT,
 ) -> DataFrame | None:
     """One micro-batch step: return the batch rows that are NOT
     near-duplicates of the indexed corpus or of an earlier row in the
@@ -173,7 +85,6 @@ def dedup_batch_against_store(
     manifest-format stores stay transactional; the band index is an
     engine-internal artifact with a fixed parquet layout and stays
     raw."""
-    fmt = fmt or ParquetFormat()
     from faexport_db_spark.training.indexmeta import ensure_index_meta
 
     spark = batch.sparkSession
@@ -199,26 +110,20 @@ def dedup_batch_against_store(
         batch, text_col, id_col, num_perm, bands, shingle_n
     ).localCheckpoint(eager=True)
 
-    dup_ids = None
+    self_pairs = minhash_dedup_pairs(
+        batch, text_col, id_col, num_perm, bands, shingle_n, threshold,
+        banded=banded,
+    )
+    dup_ids = [self_pairs.select(F.col("id_b").alias(id_col))]
     corpus = _read_store_or_none(fmt, spark, store_path)
     if corpus is not None:
         cross = minhash_dedup_against_index(
             batch, corpus, index_path, text_col, id_col,
             num_perm, bands, shingle_n, threshold, banded=banded,
         )
-        dup_ids = cross.select(F.col("id_b").alias(id_col)).distinct()
-    self_pairs = minhash_dedup_pairs(
-        batch, text_col, id_col, num_perm, bands, shingle_n, threshold,
-        banded=banded,
-    )
-    self_dups = self_pairs.select(F.col("id_b").alias(id_col)).distinct()
-    dup_ids = self_dups if dup_ids is None else dup_ids.unionByName(self_dups).distinct()
+        dup_ids.append(cross.select(F.col("id_b").alias(id_col)))
 
-    survivors = batch.join(F.broadcast(dup_ids), id_col, "left_anti")
-    # Materialize ONCE before the two appends (probe + anti-join would
-    # otherwise recompute per sink write).
-    survivors = survivors.localCheckpoint(eager=True)
-    fmt.append(survivors, store_path)
+    survivors = append_survivors(batch, dup_ids, id_col, store_path, fmt)
     (
         banded.join(F.broadcast(survivors.select(id_col)), id_col, "left_semi")
         .write.mode("append")
@@ -227,35 +132,6 @@ def dedup_batch_against_store(
     )
     mark()  # both appends durable → re-delivery of this batch is a no-op
     return survivors
-
-
-def start_streaming_dedup(
-    spark: SparkSession,
-    source: DataFrame,
-    store_path: str,
-    index_path: str,
-    checkpoint: str,
-    trigger: dict | None = None,
-    **dedup_kwargs,
-):
-    """Wire ``dedup_batch_against_store`` into a streaming query via
-    foreachBatch. ``source`` is any streaming DataFrame with
-    (doc_id, text) columns."""
-
-    sid = _stream_id(spark, checkpoint)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        dedup_batch_against_store(
-            batch_df, store_path, index_path,
-            batch_id=batch_id, stream_id=sid, **dedup_kwargs
-        )
-
-    writer = source.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def embed_dedup_batch_against_store(
@@ -271,7 +147,7 @@ def embed_dedup_batch_against_store(
     threshold: float = 0.95,
     batch_id: int | None = None,
     stream_id: str | None = None,
-    fmt: TableFormat | None = None,
+    fmt: TableFormat = DEFAULT_FORMAT,
 ) -> DataFrame | None:
     """Embedding analog of ``dedup_batch_against_store``: one
     micro-batch of vectors is coded ONCE (Arrow matmul, map-side),
@@ -281,7 +157,7 @@ def embed_dedup_batch_against_store(
     N+1 dedups against batch N with no corpus re-coding. The first
     batch also writes the index parameter sidecar so every later probe
     validates against it. ``batch_id`` enables the per-batch commit
-    marker (module docstring): an already-committed batch returns
+    marker (``streaming/microbatch.py``): an already-committed batch returns
     ``None`` without appending. ``fmt`` is the store's strategy, as in
     ``dedup_batch_against_store``; the code index stays raw parquet."""
     from faexport_db_spark.training.indexmeta import ensure_index_meta
@@ -291,7 +167,6 @@ def embed_dedup_batch_against_store(
         embed_dedup_against_index,
     )
 
-    fmt = fmt or ParquetFormat()
     spark = batch.sparkSession
     committed, mark = _batch_marker(spark, index_path, batch_id, stream_id)
     if committed:
@@ -310,7 +185,11 @@ def embed_dedup_batch_against_store(
         batch, id_col, vec_col, nbits, n_tables, dim, seed
     ).localCheckpoint(eager=True)
 
-    dup_ids = None
+    self_pairs = cosine_near_dup_pairs_lsh(
+        batch, threshold, id_col, vec_col, nbits, n_tables, dim, seed,
+        entries=coded,
+    )
+    dup_ids = [self_pairs.select(F.col("id_b").alias(id_col))]
     corpus = _read_store_or_none(fmt, spark, store_path)
     if corpus is not None:
         cross = embed_dedup_against_index(
@@ -318,20 +197,9 @@ def embed_dedup_batch_against_store(
             nbits, n_tables, dim, seed,
             probes=coded.withColumnRenamed("vid", "new_id"),
         )
-        dup_ids = cross.select(F.col("id_b").alias(id_col)).distinct()
-    self_pairs = cosine_near_dup_pairs_lsh(
-        batch, threshold, id_col, vec_col, nbits, n_tables, dim, seed,
-        entries=coded,
-    )
-    self_dups = self_pairs.select(F.col("id_b").alias(id_col)).distinct()
-    dup_ids = (
-        self_dups if dup_ids is None
-        else dup_ids.unionByName(self_dups).distinct()
-    )
+        dup_ids.append(cross.select(F.col("id_b").alias(id_col)))
 
-    survivors = batch.join(F.broadcast(dup_ids), id_col, "left_anti")
-    survivors = survivors.localCheckpoint(eager=True)
-    fmt.append(survivors, store_path)
+    survivors = append_survivors(batch, dup_ids, id_col, store_path, fmt)
     (
         coded.join(F.broadcast(survivors.select(F.col(id_col).alias("vid"))), "vid", "left_semi")
         .write.mode("append")
@@ -340,35 +208,6 @@ def embed_dedup_batch_against_store(
     )
     mark()  # both appends durable → re-delivery of this batch is a no-op
     return survivors
-
-
-def start_streaming_embed_dedup(
-    spark: SparkSession,
-    source: DataFrame,
-    store_path: str,
-    index_path: str,
-    checkpoint: str,
-    trigger: dict | None = None,
-    **dedup_kwargs,
-):
-    """Wire ``embed_dedup_batch_against_store`` into a streaming query
-    via foreachBatch. ``source`` is any streaming DataFrame with
-    (vec_id, embedding) columns."""
-
-    sid = _stream_id(spark, checkpoint)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        embed_dedup_batch_against_store(
-            batch_df, store_path, index_path,
-            batch_id=batch_id, stream_id=sid, **dedup_kwargs
-        )
-
-    writer = source.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def semantic_dedup_batch_against_store(
@@ -383,7 +222,7 @@ def semantic_dedup_batch_against_store(
     max_cluster: int | None = 10_000,
     batch_id: int | None = None,
     stream_id: str | None = None,
-    fmt: TableFormat | None = None,
+    fmt: TableFormat = DEFAULT_FORMAT,
 ) -> DataFrame | None:
     """Semantic (SemDeDup) analog of ``embed_dedup_batch_against_store``:
     the first non-empty batch trains the k-means model ONCE and seeds
@@ -421,7 +260,6 @@ def semantic_dedup_batch_against_store(
         semantic_dedup_pairs,
     )
 
-    fmt = fmt or ParquetFormat()
     spark = batch.sparkSession
     committed, mark = _batch_marker(spark, index_path, batch_id, stream_id)
     if committed:
@@ -437,26 +275,20 @@ def semantic_dedup_batch_against_store(
         # centroid-update comprehension would index past the seed list
         n_eff = min(n_centroids, batch.count())
         centroids = ivf_centroids(batch, n_eff, iters, id_col, vec_col)
-        dup_ids = None
     else:
         centroids = _read_centroids(spark, index_path)
-        cross = semantic_dedup_against_index(
-            batch, index_path, threshold, id_col, vec_col, max_cluster
-        )
-        dup_ids = cross.select(F.col("id_b").alias(id_col)).distinct()
 
     self_pairs = semantic_dedup_pairs(
         batch, threshold=threshold, id_col=id_col, vec_col=vec_col,
         centroids=centroids, max_cluster=max_cluster,
     )
-    self_dups = self_pairs.select(F.col("id_b").alias(id_col)).distinct()
-    dup_ids = (
-        self_dups if dup_ids is None
-        else dup_ids.unionByName(self_dups).distinct()
-    )
-    survivors = batch.join(F.broadcast(dup_ids), id_col, "left_anti")
-    survivors = survivors.localCheckpoint(eager=True)  # pin before index mutates
-    fmt.append(survivors, store_path)
+    dup_ids = [self_pairs.select(F.col("id_b").alias(id_col))]
+    if not bootstrap:
+        cross = semantic_dedup_against_index(
+            batch, index_path, threshold, id_col, vec_col, max_cluster
+        )
+        dup_ids.append(cross.select(F.col("id_b").alias(id_col)))
+    survivors = append_survivors(batch, dup_ids, id_col, store_path, fmt)
     if bootstrap:
         (
             survivors.select(
@@ -481,34 +313,6 @@ def _read_centroids(spark: SparkSession, index_path: str) -> list[list[float]]:
     return read_model_sidecar(spark, index_path, "_centroids.json")
 
 
-def start_streaming_semantic_dedup(
-    spark: SparkSession,
-    source: DataFrame,
-    store_path: str,
-    index_path: str,
-    checkpoint: str,
-    trigger: dict | None = None,
-    **dedup_kwargs,
-):
-    """Wire ``semantic_dedup_batch_against_store`` into a streaming
-    query via foreachBatch. ``source`` is any streaming DataFrame with
-    (vec_id, embedding) columns."""
-    sid = _stream_id(spark, checkpoint)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        semantic_dedup_batch_against_store(
-            batch_df, store_path, index_path,
-            batch_id=batch_id, stream_id=sid, **dedup_kwargs
-        )
-
-    writer = source.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
-
-
 def passage_dedup_batch_against_store(
     batch: DataFrame,
     store_path: str,
@@ -518,7 +322,7 @@ def passage_dedup_batch_against_store(
     id_col: str = "doc_id",
     batch_id: int | None = None,
     stream_id: str | None = None,
-    fmt: TableFormat | None = None,
+    fmt: TableFormat = DEFAULT_FORMAT,
 ) -> DataFrame | None:
     """Passage-level analog of ``dedup_batch_against_store``: the
     batch's duplicated passages (vs the indexed corpus AND earlier
@@ -548,17 +352,12 @@ def passage_dedup_batch_against_store(
         passage_dedup_probe,
     )
 
-    fmt = fmt or ParquetFormat()
     spark = batch.sparkSession
     committed, mark = _batch_marker(spark, index_path, batch_id, stream_id)
     if committed:
         return None
     batch = batch.select(id_col, text_col)
-    from faexport_db_spark.operators.hadoop_fs import HadoopFs
-
-    if not HadoopFs(spark, index_path).exists(
-        f"{index_path.rstrip('/')}/_index_meta.json"
-    ):
+    if not index_exists(spark, index_path):
         # first batch bootstraps an empty index (sidecar + zero tiles)
         build_passage_index(
             batch.filter(F.lit(False)), index_path, tile_tokens, text_col, id_col
@@ -570,44 +369,14 @@ def passage_dedup_batch_against_store(
     # the index the probe reads, so an unpinned kept_ths recomputed
     # after the store append would still be consistent, but one
     # recomputed after its OWN append would not.
-    survivors = (
-        cleaned.filter(F.length("clean_text") > 0)
-        .select(F.col(id_col), F.col("clean_text").alias(text_col))
-        .localCheckpoint(eager=True)
+    survivors = nonempty_cleaned(cleaned, id_col, text_col).localCheckpoint(
+        eager=True
     )
     kept_ths = kept_ths.localCheckpoint(eager=True)
     fmt.append(survivors, store_path)
     kept_ths.write.mode("append").parquet(index_path)
     mark()
     return survivors
-
-
-def start_streaming_passage_dedup(
-    spark: SparkSession,
-    source: DataFrame,
-    store_path: str,
-    index_path: str,
-    checkpoint: str,
-    trigger: dict | None = None,
-    **dedup_kwargs,
-):
-    """Wire ``passage_dedup_batch_against_store`` into a streaming
-    query via foreachBatch. ``source`` is any streaming DataFrame with
-    (doc_id, text) columns."""
-    sid = _stream_id(spark, checkpoint)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        passage_dedup_batch_against_store(
-            batch_df, store_path, index_path,
-            batch_id=batch_id, stream_id=sid, **dedup_kwargs
-        )
-
-    writer = source.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def substring_dedup_batch_against_store(
@@ -619,7 +388,7 @@ def substring_dedup_batch_against_store(
     id_col: str = "doc_id",
     batch_id: int | None = None,
     stream_id: str | None = None,
-    fmt: TableFormat | None = None,
+    fmt: TableFormat = DEFAULT_FORMAT,
 ) -> DataFrame | None:
     """Substring-level analog of ``passage_dedup_batch_against_store``
     — the third granularity's streaming form: every batch token
@@ -642,22 +411,18 @@ def substring_dedup_batch_against_store(
     exact duplicates the maintenance dedup collapses; after BOTH
     appends it re-cleans to empty against the batch's own grams,
     appends nothing, and just completes the marker."""
-    from faexport_db_spark.operators.hadoop_fs import HadoopFs
     from faexport_db_spark.training.text import (
         append_substring_index,
         build_substring_index,
         substring_dedup_against_index,
     )
 
-    fmt = fmt or ParquetFormat()
     spark = batch.sparkSession
     committed, mark = _batch_marker(spark, index_path, batch_id, stream_id)
     if committed:
         return None
     batch = batch.select(id_col, text_col)
-    if not HadoopFs(spark, index_path).exists(
-        f"{index_path.rstrip('/')}/_index_meta.json"
-    ):
+    if not index_exists(spark, index_path):
         # first batch bootstraps an empty index (sidecar + zero grams)
         build_substring_index(
             batch.filter(F.lit(False)), index_path, min_tokens, text_col, id_col
@@ -665,43 +430,13 @@ def substring_dedup_batch_against_store(
     cleaned = substring_dedup_against_index(
         batch, index_path, min_tokens, text_col, id_col, append=False
     )
-    survivors = (
-        cleaned.filter(F.length("clean_text") > 0)
-        .select(F.col(id_col), F.col("clean_text").alias(text_col))
-        .localCheckpoint(eager=True)  # pin before any mutation
+    survivors = nonempty_cleaned(cleaned, id_col, text_col).localCheckpoint(
+        eager=True  # pin before any mutation
     )
     fmt.append(survivors, store_path)
     append_substring_index(survivors, index_path, min_tokens, text_col, id_col)
     mark()
     return survivors
-
-
-def start_streaming_substring_dedup(
-    spark: SparkSession,
-    source: DataFrame,
-    store_path: str,
-    index_path: str,
-    checkpoint: str,
-    trigger: dict | None = None,
-    **dedup_kwargs,
-):
-    """Wire ``substring_dedup_batch_against_store`` into a streaming
-    query via foreachBatch. ``source`` is any streaming DataFrame with
-    (doc_id, text) columns."""
-    sid = _stream_id(spark, checkpoint)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        substring_dedup_batch_against_store(
-            batch_df, store_path, index_path,
-            batch_id=batch_id, stream_id=sid, **dedup_kwargs
-        )
-
-    writer = source.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def media_dedup_batch_against_store(
@@ -715,7 +450,7 @@ def media_dedup_batch_against_store(
     bytes_col: str = "media_bytes",
     batch_id: int | None = None,
     stream_id: str | None = None,
-    fmt: TableFormat | None = None,
+    fmt: TableFormat = DEFAULT_FORMAT,
 ) -> DataFrame | None:
     """Byte-level media analog of ``embed_dedup_batch_against_store``:
     one micro-batch of opaque payloads is chunk-signed ONCE (map-side,
@@ -726,7 +461,6 @@ def media_dedup_batch_against_store(
     against batch N with no corpus re-signing. Same commit-marker
     protocol, parameter-sidecar validation and store-strategy seam as
     the other dedup streams; the signature index stays raw parquet."""
-    from faexport_db_spark.operators.hadoop_fs import HadoopFs
     from faexport_db_spark.training.multimodal import (
         build_media_chunk_index,
         media_chunk_signatures,
@@ -734,15 +468,12 @@ def media_dedup_batch_against_store(
         media_near_dup_pairs,
     )
 
-    fmt = fmt or ParquetFormat()
     spark = batch.sparkSession
     committed, mark = _batch_marker(spark, index_path, batch_id, stream_id)
     if committed:
         return None
     batch = batch.select(id_col, bytes_col)
-    if not HadoopFs(spark, index_path).exists(
-        f"{index_path.rstrip('/')}/_index_meta.json"
-    ):
+    if not index_exists(spark, index_path):
         # first batch bootstraps an empty index (sidecar + zero rows)
         build_media_chunk_index(
             batch.filter(F.lit(False)), index_path, chunk_bytes, id_col, bytes_col
@@ -755,17 +486,14 @@ def media_dedup_batch_against_store(
         batch, index_path, threshold, chunk_bytes, max_bucket,
         id_col, bytes_col, sigs=sigs,
     )
-    dup_ids = cross.select(F.col("id_a").alias(id_col)).distinct()
     self_pairs = media_near_dup_pairs(
         batch, threshold, chunk_bytes, max_bucket, id_col, bytes_col, sigs=sigs
     )
-    dup_ids = dup_ids.unionByName(
-        self_pairs.select(F.col("id_b").alias(id_col))
-    ).distinct()
-
-    survivors = batch.join(F.broadcast(dup_ids), id_col, "left_anti")
-    survivors = survivors.localCheckpoint(eager=True)  # pin before mutation
-    fmt.append(survivors, store_path)
+    dup_ids = [
+        cross.select(F.col("id_a").alias(id_col)),
+        self_pairs.select(F.col("id_b").alias(id_col)),
+    ]
+    survivors = append_survivors(batch, dup_ids, id_col, store_path, fmt)
     (
         sigs.join(
             F.broadcast(survivors.select(id_col)), id_col, "left_semi"
@@ -776,34 +504,6 @@ def media_dedup_batch_against_store(
     )
     mark()  # both appends durable → re-delivery of this batch is a no-op
     return survivors
-
-
-def start_streaming_media_dedup(
-    spark: SparkSession,
-    source: DataFrame,
-    store_path: str,
-    index_path: str,
-    checkpoint: str,
-    trigger: dict | None = None,
-    **dedup_kwargs,
-):
-    """Wire ``media_dedup_batch_against_store`` into a streaming query
-    via foreachBatch. ``source`` is any streaming DataFrame with
-    (media_id, media_bytes) columns."""
-    sid = _stream_id(spark, checkpoint)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        media_dedup_batch_against_store(
-            batch_df, store_path, index_path,
-            batch_id=batch_id, stream_id=sid, **dedup_kwargs
-        )
-
-    writer = source.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def line_dedup_batch_against_store(
@@ -817,7 +517,7 @@ def line_dedup_batch_against_store(
     normalize: bool = True,
     batch_id: int | None = None,
     stream_id: str | None = None,
-    fmt: TableFormat | None = None,
+    fmt: TableFormat = DEFAULT_FORMAT,
 ) -> DataFrame | None:
     """Line-level analog of ``passage_dedup_batch_against_store``:
     every batch line whose historical+in-batch frequency exceeds
@@ -846,17 +546,12 @@ def line_dedup_batch_against_store(
 
     from faexport_db_spark.training.text import line_dedup_against_index
 
-    fmt = fmt or ParquetFormat()
     spark = batch.sparkSession
     committed, mark = _batch_marker(spark, index_path, batch_id, stream_id)
     if committed:
         return None
     batch = batch.select(id_col, text_col)
-    from faexport_db_spark.operators.hadoop_fs import HadoopFs
-
-    if not HadoopFs(spark, index_path).exists(
-        f"{index_path.rstrip('/')}/_index_meta.json"
-    ):
+    if not index_exists(spark, index_path):
         # Bootstrap with a zero-count sentinel row, not an empty frame:
         # a rowless partitioned write creates NO files, and the next
         # probe's schema inference would fail on the empty directory.
@@ -883,9 +578,7 @@ def line_dedup_batch_against_store(
         normalize=normalize,
         append=False,
     ).localCheckpoint(eager=True)  # pin before the index mutates
-    survivors = cleaned.filter(F.length("clean_text") > 0).select(
-        F.col(id_col), F.col("clean_text").alias(text_col)
-    )
+    survivors = nonempty_cleaned(cleaned, id_col, text_col)
     fmt.append(survivors, store_path)
     from faexport_db_spark.training.text import _lines
 
@@ -917,34 +610,6 @@ def line_dedup_batch_against_store(
     return survivors
 
 
-def start_streaming_line_dedup(
-    spark: SparkSession,
-    source: DataFrame,
-    store_path: str,
-    index_path: str,
-    checkpoint: str,
-    trigger: dict | None = None,
-    **dedup_kwargs,
-):
-    """Wire ``line_dedup_batch_against_store`` into a streaming query
-    via foreachBatch. ``source`` is any streaming DataFrame with
-    (doc_id, text) columns."""
-    sid = _stream_id(spark, checkpoint)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        line_dedup_batch_against_store(
-            batch_df, store_path, index_path,
-            batch_id=batch_id, stream_id=sid, **dedup_kwargs
-        )
-
-    writer = source.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
-
-
 def media_cdc_dedup_batch_against_store(
     batch: DataFrame,
     store_path: str,
@@ -958,7 +623,7 @@ def media_cdc_dedup_batch_against_store(
     bytes_col: str = "media_bytes",
     batch_id: int | None = None,
     stream_id: str | None = None,
-    fmt: TableFormat | None = None,
+    fmt: TableFormat = DEFAULT_FORMAT,
 ) -> DataFrame | None:
     """Insertion-robust streaming media dedup: the CDC analog of
     ``media_dedup_batch_against_store`` — each micro-batch is
@@ -969,8 +634,7 @@ def media_cdc_dedup_batch_against_store(
     survivors + their index entries appended. Same commit-marker
     protocol, parameter-sidecar validation and store-strategy seam as
     the fixed-width stream; mid-batch crash window is identical
-    (marker granularity is whole-batch — see module docstring)."""
-    from faexport_db_spark.operators.hadoop_fs import HadoopFs
+    (marker granularity is whole-batch — see ``streaming/microbatch.py``)."""
     from faexport_db_spark.training.multimodal import (
         _cdc_entries,
         build_cdc_chunk_index,
@@ -978,15 +642,12 @@ def media_cdc_dedup_batch_against_store(
         media_cdc_near_dup_pairs,
     )
 
-    fmt = fmt or ParquetFormat()
     spark = batch.sparkSession
     committed, mark = _batch_marker(spark, index_path, batch_id, stream_id)
     if committed:
         return None
     batch = batch.select(id_col, bytes_col)
-    if not HadoopFs(spark, index_path).exists(
-        f"{index_path.rstrip('/')}/_index_meta.json"
-    ):
+    if not index_exists(spark, index_path):
         build_cdc_chunk_index(
             batch.filter(F.lit(False)), index_path,
             window, boundary_prefix, min_chunk, id_col, bytes_col,
@@ -1001,18 +662,15 @@ def media_cdc_dedup_batch_against_store(
         batch, index_path, threshold, window, boundary_prefix, min_chunk,
         max_bucket, id_col, bytes_col, sigs=sigs,
     )
-    dup_ids = cross.select(F.col("id_a").alias(id_col)).distinct()
     self_pairs = media_cdc_near_dup_pairs(
         batch, threshold, window, boundary_prefix, min_chunk,
         max_bucket, id_col, bytes_col, sigs=sigs,
     )
-    dup_ids = dup_ids.unionByName(
-        self_pairs.select(F.col("id_b").alias(id_col))
-    ).distinct()
-
-    survivors = batch.join(F.broadcast(dup_ids), id_col, "left_anti")
-    survivors = survivors.localCheckpoint(eager=True)  # pin before mutation
-    fmt.append(survivors, store_path)
+    dup_ids = [
+        cross.select(F.col("id_a").alias(id_col)),
+        self_pairs.select(F.col("id_b").alias(id_col)),
+    ]
+    survivors = append_survivors(batch, dup_ids, id_col, store_path, fmt)
     (
         _cdc_entries(
             batch, window, boundary_prefix, min_chunk, id_col, bytes_col,
@@ -1025,34 +683,6 @@ def media_cdc_dedup_batch_against_store(
     )
     mark()  # both appends durable → re-delivery of this batch is a no-op
     return survivors
-
-
-def start_streaming_media_cdc_dedup(
-    spark: SparkSession,
-    source: DataFrame,
-    store_path: str,
-    index_path: str,
-    checkpoint: str,
-    trigger: dict | None = None,
-    **dedup_kwargs,
-):
-    """Wire ``media_cdc_dedup_batch_against_store`` into a streaming
-    query via foreachBatch. ``source`` is any streaming DataFrame with
-    (media_id, media_bytes) columns."""
-    sid = _stream_id(spark, checkpoint)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        media_cdc_dedup_batch_against_store(
-            batch_df, store_path, index_path,
-            batch_id=batch_id, stream_id=sid, **dedup_kwargs
-        )
-
-    writer = source.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def fuzzy_decontaminate_batch_against_benchmark(
@@ -1068,7 +698,7 @@ def fuzzy_decontaminate_batch_against_benchmark(
     max_bucket: int | None = 10_000,
     batch_id: int | None = None,
     stream_id: str | None = None,
-    fmt: TableFormat | None = None,
+    fmt: TableFormat = DEFAULT_FORMAT,
 ) -> DataFrame | None:
     """Streaming fuzzy decontamination: each micro-batch of corpus
     docs drops everything within MinHash Jaccard ``threshold`` of the
@@ -1082,7 +712,6 @@ def fuzzy_decontaminate_batch_against_benchmark(
     namespaces the two sides internally before they meet."""
     from faexport_db_spark.training.dedup import fuzzy_decontaminate
 
-    fmt = fmt or ParquetFormat()
     spark = batch.sparkSession
     committed, mark = _batch_marker(spark, store_path, batch_id, stream_id)
     if committed:
@@ -1096,35 +725,6 @@ def fuzzy_decontaminate_batch_against_benchmark(
     return clean
 
 
-def start_streaming_fuzzy_decontaminate(
-    spark: SparkSession,
-    source: DataFrame,
-    benchmark: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    trigger: dict | None = None,
-    **decon_kwargs,
-):
-    """Wire ``fuzzy_decontaminate_batch_against_benchmark`` into a
-    streaming query via foreachBatch. ``source`` is any streaming
-    DataFrame with (doc_id, text) columns; ``benchmark`` is a static
-    frame."""
-    sid = _stream_id(spark, checkpoint)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        fuzzy_decontaminate_batch_against_benchmark(
-            batch_df, benchmark, store_path,
-            batch_id=batch_id, stream_id=sid, **decon_kwargs
-        )
-
-    writer = source.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
-
-
 def bloom_decontaminate_batch(
     batch: DataFrame,
     bloom_words: list[int],
@@ -1136,18 +736,18 @@ def bloom_decontaminate_batch(
     id_col: str = "doc_id",
     batch_id: int | None = None,
     stream_id: str | None = None,
-    fmt: TableFormat | None = None,
+    fmt: TableFormat = DEFAULT_FORMAT,
 ) -> DataFrame | None:
     """Streaming Bloom decontamination: each micro-batch probes a
-    PREBUILT filter (``build_bloom_filter`` output — built once when
-    the stream starts, not per batch) and appends the survivors. The
+    PREBUILT filter (``build_bloom_filter`` output — the caller builds
+    it once before the stream starts, not per batch) and appends the
+    survivors. The
     probe is stateless and map-only, so the only cross-batch state is
     the commit marker that makes re-delivered batches a no-op; the
     filter itself is a constant-size long array shipped with the
     closure, the streaming analog of a broadcast tokenizer vocab."""
     from faexport_db_spark.training.text import bloom_probe_filter
 
-    fmt = fmt or ParquetFormat()
     spark = batch.sparkSession
     committed, mark = _batch_marker(spark, store_path, batch_id, stream_id)
     if committed:
@@ -1160,36 +760,3 @@ def bloom_decontaminate_batch(
     return clean
 
 
-def start_streaming_bloom_decontaminate(
-    spark: SparkSession,
-    source: DataFrame,
-    benchmark: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    n: int = 5,
-    m_bits: int = 1 << 22,
-    k: int = 3,
-    trigger: dict | None = None,
-    **batch_kwargs,
-):
-    """Wire ``bloom_decontaminate_batch`` into a streaming query via
-    foreachBatch. The Bloom filter is built from the static
-    ``benchmark`` ONCE, before the stream starts — every micro-batch
-    reuses the same word array."""
-    from faexport_db_spark.training.text import build_bloom_filter
-
-    words = build_bloom_filter(benchmark, n, m_bits, k)
-    sid = _stream_id(spark, checkpoint)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        bloom_decontaminate_batch(
-            batch_df, words, store_path, n, m_bits, k,
-            batch_id=batch_id, stream_id=sid, **batch_kwargs
-        )
-
-    writer = source.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from faexport_db_spark.datamodel.table_format import DEFAULT_FORMAT, TableFormat
 from faexport_db_spark.operators.merge import merged_users
+from faexport_db_spark.streaming.microbatch import start_batch_stream
 
 ENTITY_KEY = ["website_id", "site_user_id"]
 
@@ -80,7 +81,7 @@ def start_incremental_merged_users(
     store, then refreshes exactly the touched entities.
     """
 
-    def _process(batch: DataFrame, batch_id: int) -> None:
+    def _process(batch: DataFrame, batch_id: int, stream_id: str) -> None:
         if not batch.take(1):
             return
         DEFAULT_FORMAT.append(batch, snapshot_store_dir, ["website_id"])
@@ -91,8 +92,7 @@ def start_incremental_merged_users(
             batch.select(*ENTITY_KEY),
         )
 
-    writer = snapshot_stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
+    return start_batch_stream(
+        snapshot_stream, checkpoint, _process,
+        trigger=trigger or {"processingTime": "60 seconds"},
     )
-    writer = writer.trigger(**(trigger or {"processingTime": "60 seconds"}))
-    return writer.start()

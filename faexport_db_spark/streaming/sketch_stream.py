@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from faexport_db_spark.streaming.microbatch import publish_batch_partition
 from faexport_db_spark.training.pipeline import hll_register_table
 
 
@@ -40,26 +41,19 @@ def hll_batch_into_store(
     batch's own register table (one bounded map-side-combining
     groupBy) and publish it under a per-batch partition directory.
 
-    The publish is write-to-hidden-dir then rename: Spark's parquet
-    reader skips dot-prefixed paths, so a concurrent
-    ``read_hll_store`` never observes partial files mid-write — at
-    worst it misses a not-yet-renamed partition (a transient
-    undercount that the monotone MAX-merge repairs on the next read).
-    Re-delivery of a crashed batch rewrites the identical rows, so a
-    crash at any point (partial hidden dir, missing final dir) is
-    repaired by idempotence — see the module docstring."""
-    from faexport_db_spark.operators.hadoop_fs import HadoopFs
-
-    ns = stream_id or "direct"
-    base = store_path.rstrip("/")
-    tag = f"{ns}-{batch_id if batch_id is not None else 0}"
-    part = f"{base}/batch={tag}"
-    tmp = f"{base}/.tmp-batch={tag}"
-    hll_register_table(batch, col, p).write.mode("overwrite").parquet(tmp)
-    fs = HadoopFs(batch.sparkSession, base)
-    if fs.exists(part):
-        fs.delete(part, recursive=True)
-    fs.rename(tmp, part)
+    The publish is write-to-hidden-dir then rename
+    (``publish_batch_partition``), so a concurrent ``read_hll_store``
+    never observes partial files mid-write — at worst it misses a
+    not-yet-renamed partition (a transient undercount that the
+    monotone MAX-merge repairs on the next read). Re-delivery of a
+    crashed batch rewrites the identical rows, so a crash at any point
+    (partial hidden dir, missing final dir) is repaired by idempotence
+    — see the module docstring. Distinct counts over everything ever
+    streamed come from ``hll_estimate(read_hll_store(...))`` at any
+    time, concurrent with the stream."""
+    publish_batch_partition(
+        hll_register_table(batch, col, p), store_path, batch_id, stream_id
+    )
 
 
 def read_hll_store(spark: SparkSession, store_path: str) -> DataFrame:
@@ -72,37 +66,6 @@ def read_hll_store(spark: SparkSession, store_path: str) -> DataFrame:
         .groupBy("bucket")
         .agg(F.max("register").alias("register"))
     )
-
-
-def start_streaming_hll(
-    spark: SparkSession,
-    source: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    col: str,
-    p: int = 8,
-    trigger: dict | None = None,
-):
-    """Wire ``hll_batch_into_store`` into a streaming query via
-    foreachBatch. ``source`` is any streaming DataFrame carrying
-    ``col``; distinct counts over everything ever streamed come from
-    ``hll_estimate(read_hll_store(...))`` at any time, concurrent with
-    the stream — the hidden-dir-then-rename publish means a concurrent
-    read never sees partial files, only (at worst) a transient
-    undercount of the in-flight batch."""
-    from faexport_db_spark.streaming.dedup_stream import _stream_id
-
-    sid = _stream_id(spark, checkpoint)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        hll_batch_into_store(batch_df, store_path, col, p, batch_id, sid)
-
-    writer = source.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def kmv_batch_into_store(
@@ -119,19 +82,11 @@ def kmv_batch_into_store(
     the same hidden-dir-then-rename publish. KMV union (bottom-k of a
     concatenation) is idempotent and commutative exactly like the HLL
     MAX, so re-delivery and mid-write crashes need no commit marker."""
-    from faexport_db_spark.operators.hadoop_fs import HadoopFs
     from faexport_db_spark.training.pipeline import kmv_sketch
 
-    ns = stream_id or "direct"
-    base = store_path.rstrip("/")
-    tag = f"{ns}-{batch_id if batch_id is not None else 0}"
-    part = f"{base}/batch={tag}"
-    tmp = f"{base}/.tmp-batch={tag}"
-    kmv_sketch(batch, col, k).write.mode("overwrite").parquet(tmp)
-    fs = HadoopFs(batch.sparkSession, base)
-    if fs.exists(part):
-        fs.delete(part, recursive=True)
-    fs.rename(tmp, part)
+    publish_batch_partition(
+        kmv_sketch(batch, col, k), store_path, batch_id, stream_id
+    )
 
 
 def read_kmv_store(spark: SparkSession, store_path: str, k: int = 256) -> DataFrame:
@@ -152,35 +107,6 @@ def read_kmv_store(spark: SparkSession, store_path: str, k: int = 256) -> DataFr
     )
 
 
-def start_streaming_kmv(
-    spark: SparkSession,
-    source: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    col: str,
-    k: int = 256,
-    trigger: dict | None = None,
-):
-    """Wire ``kmv_batch_into_store`` into a streaming query via
-    foreachBatch: a continuously-maintained distinct sketch whose
-    set algebra (union/intersection vs OTHER corpora or streams)
-    stays available at any time, with the same no-partial-files
-    read guarantee as the HLL store."""
-    from faexport_db_spark.streaming.dedup_stream import _stream_id
-
-    sid = _stream_id(spark, checkpoint)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        kmv_batch_into_store(batch_df, store_path, col, k, batch_id, sid)
-
-    writer = source.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
-
-
 def qsketch_batch_into_store(
     batch: DataFrame,
     store_path: str,
@@ -197,20 +123,13 @@ def qsketch_batch_into_store(
     keeps concurrent readers off partial files), and the read path
     sums each batch's contribution exactly once — the line-dedup
     count-partition scheme, where the IDEMPOTENT WRITE stands in for
-    an idempotent merge."""
-    from faexport_db_spark.operators.hadoop_fs import HadoopFs
+    an idempotent merge. "p99 of everything ever streamed" is read
+    at any time via ``qsketch_quantile_brackets(read_qsketch_store)``."""
     from faexport_db_spark.training.pipeline import qsketch_register_table
 
-    ns = stream_id or "direct"
-    base = store_path.rstrip("/")
-    tag = f"{ns}-{batch_id if batch_id is not None else 0}"
-    part = f"{base}/batch={tag}"
-    tmp = f"{base}/.tmp-batch={tag}"
-    qsketch_register_table(batch, value).write.mode("overwrite").parquet(tmp)
-    fs = HadoopFs(batch.sparkSession, base)
-    if fs.exists(part):
-        fs.delete(part, recursive=True)
-    fs.rename(tmp, part)
+    publish_batch_partition(
+        qsketch_register_table(batch, value), store_path, batch_id, stream_id
+    )
 
 
 def read_qsketch_store(spark: SparkSession, store_path: str) -> DataFrame:
@@ -227,29 +146,3 @@ def read_qsketch_store(spark: SparkSession, store_path: str) -> DataFrame:
     )
 
 
-def start_streaming_qsketch(
-    spark: SparkSession,
-    source: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    value,
-    trigger: dict | None = None,
-):
-    """Wire ``qsketch_batch_into_store`` into a streaming query via
-    foreachBatch: continuously-maintained rank statistics — "p99 of
-    everything ever streamed" — from constant per-batch state, read
-    at any time via ``qsketch_quantile_brackets(read_qsketch_store)``.
-    """
-    from faexport_db_spark.streaming.dedup_stream import _stream_id
-
-    sid = _stream_id(spark, checkpoint)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        qsketch_batch_into_store(batch_df, store_path, value, batch_id, sid)
-
-    writer = source.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()

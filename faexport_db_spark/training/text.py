@@ -1034,8 +1034,9 @@ def build_line_index(
 
     ``partitioned`` writes the counts under a ``src=corpus`` hive
     partition — REQUIRED when the index will be appended to by the
-    streaming wrapper, whose per-batch ``src=`` partitions make
-    retries idempotent (dynamic partition overwrite); a flat layout
+    streaming step (``line_dedup_batch_against_store``), whose
+    per-batch ``src=`` partitions make retries idempotent (dynamic
+    partition overwrite); a flat layout
     cannot be mixed with partitioned appends (Spark rejects
     conflicting directory structures)."""
     from faexport_db_spark.training.indexmeta import write_index_meta

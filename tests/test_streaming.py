@@ -501,8 +501,9 @@ def test_failed_batch_redelivery_then_dedup_is_exactly_once(spark, tmp_path):
         assert got_rows == want_rows, f"{n}: crash+redeliver+cleanup != single delivery"
 
 
-@pytest.mark.parametrize("fmt_name", sorted(STORE_FORMATS))
-@pytest.mark.slow
+@pytest.mark.parametrize(
+    "fmt_name", [pytest.param("manifest", marks=pytest.mark.slow), "parquet"]
+)
 def test_streaming_dedup_filters_within_and_across_batches(
     spark, sf_small, tmp_path, fmt_name
 ):
@@ -510,7 +511,8 @@ def test_streaming_dedup_filters_within_and_across_batches(
     its internal near-dup; batch 2's near-dup of a batch-1 doc is
     caught by the INDEX probe (no corpus re-signing), while its fresh
     doc survives. The store ends with exactly the three originals."""
-    from faexport_db_spark.streaming.dedup_stream import start_streaming_dedup
+    from faexport_db_spark.streaming.dedup_stream import dedup_batch_against_store
+    from faexport_db_spark.streaming.microbatch import start_batch_stream
 
     docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
     rows = docs.orderBy("doc_id").limit(3).collect()
@@ -534,8 +536,8 @@ def test_streaming_dedup_filters_within_and_across_batches(
             str(src / f"b{i}")
         )
         stream = spark.readStream.schema(schema).parquet(str(src / f"b{i}"))
-        q = start_streaming_dedup(
-            spark, stream, store, index, checkpoint=f"{ckpt}/b{i}",
+        q = start_batch_stream(
+            stream, f"{ckpt}/b{i}", dedup_batch_against_store, store, index,
             trigger={"availableNow": True}, fmt=fmt,
         )
         q.awaitTermination(120)
@@ -576,7 +578,8 @@ def test_streaming_embed_dedup_filters_within_and_across_batches(
     survivors plus the parameter sidecar."""
     from pyspark.sql import functions as F
 
-    from faexport_db_spark.streaming.dedup_stream import start_streaming_embed_dedup
+    from faexport_db_spark.streaming.dedup_stream import embed_dedup_batch_against_store
+    from faexport_db_spark.streaming.microbatch import start_batch_stream
 
     emb = load_table(spark, sf_small, "embeddings").orderBy("vec_id").limit(3)
     rows = emb.collect()
@@ -600,8 +603,8 @@ def test_streaming_embed_dedup_filters_within_and_across_batches(
             str(src / f"b{i}")
         )
         stream = spark.readStream.schema(schema).parquet(str(src / f"b{i}"))
-        q = start_streaming_embed_dedup(
-            spark, stream, store, index, checkpoint=f"{ckpt}/b{i}",
+        q = start_batch_stream(
+            stream, f"{ckpt}/b{i}", embed_dedup_batch_against_store, store, index,
             trigger={"availableNow": True}, fmt=fmt,
         )
         q.awaitTermination(120)
@@ -636,8 +639,8 @@ def test_streaming_semantic_dedup_filters_within_and_across_batches(
     is a marker no-op."""
     from faexport_db_spark.streaming.dedup_stream import (
         semantic_dedup_batch_against_store,
-        start_streaming_semantic_dedup,
     )
+    from faexport_db_spark.streaming.microbatch import start_batch_stream
 
     emb = load_table(spark, sf_small, "embeddings").orderBy("vec_id").limit(3)
     va, vb, vc = (list(r["embedding"]) for r in emb.collect())
@@ -659,8 +662,8 @@ def test_streaming_semantic_dedup_filters_within_and_across_batches(
             str(src / f"b{i}")
         )
         stream = spark.readStream.schema(schema).parquet(str(src / f"b{i}"))
-        q = start_streaming_semantic_dedup(
-            spark, stream, store, index, checkpoint=f"{ckpt}/b{i}",
+        q = start_batch_stream(
+            stream, f"{ckpt}/b{i}", semantic_dedup_batch_against_store, store, index,
             trigger={"availableNow": True}, n_centroids=2,
         )
         q.awaitTermination(120)
@@ -725,8 +728,9 @@ def test_streaming_passage_dedup_cleans_across_batches(spark, tmp_path, fmt_name
     batch 1's are cut via the growing tile index; cleaned docs land in
     the store; fully-duplicated docs never do."""
     from faexport_db_spark.streaming.dedup_stream import (
-        start_streaming_passage_dedup,
+        passage_dedup_batch_against_store,
     )
+    from faexport_db_spark.streaming.microbatch import start_batch_stream
 
     fmt = STORE_FORMATS[fmt_name]()
     src = tmp_path / "src"
@@ -746,8 +750,8 @@ def test_streaming_passage_dedup_cleans_across_batches(spark, tmp_path, fmt_name
             str(src / f"b{i}")
         )
         stream = spark.readStream.schema(schema).parquet(str(src / f"b{i}"))
-        q = start_streaming_passage_dedup(
-            spark, stream, store, index, checkpoint=f"{ckpt}/b{i}",
+        q = start_batch_stream(
+            stream, f"{ckpt}/b{i}", passage_dedup_batch_against_store, store, index,
             trigger={"availableNow": True}, tile_tokens=5, fmt=fmt,
         )
         q.awaitTermination(120)
@@ -1065,7 +1069,8 @@ def test_cdc_stream_materializes_across_batches(spark, tmp_path):
     events and a delete-then-revive, applied over two micro-batches,
     must land exactly where the batch cdc_apply of the full log lands."""
     from faexport_db_spark.operators.merge import cdc_apply
-    from faexport_db_spark.streaming.cdc_stream import start_streaming_cdc_apply
+    from faexport_db_spark.streaming.cdc_stream import cdc_apply_batch_against_store
+    from faexport_db_spark.streaming.microbatch import start_batch_stream
 
     schema = "k bigint, seq bigint, v string, op string"
     b0 = [
@@ -1088,9 +1093,9 @@ def test_cdc_stream_materializes_across_batches(spark, tmp_path):
         .parquet(str(src / "*"))
     )
     store = str(tmp_path / "cdc_store")
-    q = start_streaming_cdc_apply(
-        spark, stream, store, str(tmp_path / "cdc_ckpt"),
-        key_cols=["k"], seq_col="seq",
+    q = start_batch_stream(
+        stream, str(tmp_path / "cdc_ckpt"), cdc_apply_batch_against_store,
+        store, key_cols=["k"], seq_col="seq",
         trigger={"availableNow": True},
     )
     q.awaitTermination(300)
@@ -1208,8 +1213,9 @@ def test_streaming_substring_dedup_cleans_across_batches(spark, tmp_path, fmt_na
     docs land in the store; a doc whose every token is covered never
     does."""
     from faexport_db_spark.streaming.dedup_stream import (
-        start_streaming_substring_dedup,
+        substring_dedup_batch_against_store,
     )
+    from faexport_db_spark.streaming.microbatch import start_batch_stream
 
     fmt = STORE_FORMATS[fmt_name]()
     src = tmp_path / "src"
@@ -1228,8 +1234,8 @@ def test_streaming_substring_dedup_cleans_across_batches(spark, tmp_path, fmt_na
             str(src / f"b{i}")
         )
         stream = spark.readStream.schema(schema).parquet(str(src / f"b{i}"))
-        q = start_streaming_substring_dedup(
-            spark, stream, store, index, checkpoint=f"{ckpt}/b{i}",
+        q = start_batch_stream(
+            stream, f"{ckpt}/b{i}", substring_dedup_batch_against_store, store, index,
             trigger={"availableNow": True}, min_tokens=8, fmt=fmt,
         )
         q.awaitTermination(120)
@@ -1297,8 +1303,9 @@ def test_streaming_media_dedup_across_batches(spark, tmp_path, fmt_name):
     signature index; novel payloads survive; within-batch exact copies
     keep the lowest id."""
     from faexport_db_spark.streaming.dedup_stream import (
-        start_streaming_media_dedup,
+        media_dedup_batch_against_store,
     )
+    from faexport_db_spark.streaming.microbatch import start_batch_stream
 
     fmt = STORE_FORMATS[fmt_name]()
     src = tmp_path / "src"
@@ -1318,8 +1325,8 @@ def test_streaming_media_dedup_across_batches(spark, tmp_path, fmt_name):
             str(src / f"b{i}")
         )
         stream = spark.readStream.schema(schema).parquet(str(src / f"b{i}"))
-        q = start_streaming_media_dedup(
-            spark, stream, store, index, checkpoint=f"{ckpt}/b{i}",
+        q = start_batch_stream(
+            stream, f"{ckpt}/b{i}", media_dedup_batch_against_store, store, index,
             trigger={"availableNow": True},
             threshold=0.8, chunk_bytes=256, fmt=fmt,
         )
@@ -1365,8 +1372,9 @@ def test_streaming_media_cdc_dedup_insertion_across_batches(spark, tmp_path, fmt
     import random
 
     from faexport_db_spark.streaming.dedup_stream import (
-        start_streaming_media_cdc_dedup,
+        media_cdc_dedup_batch_against_store,
     )
+    from faexport_db_spark.streaming.microbatch import start_batch_stream
 
     fmt = STORE_FORMATS[fmt_name]()
     src = tmp_path / "src"
@@ -1387,8 +1395,8 @@ def test_streaming_media_cdc_dedup_insertion_across_batches(spark, tmp_path, fmt
             str(src / f"b{i}")
         )
         stream = spark.readStream.schema(schema).parquet(str(src / f"b{i}"))
-        q = start_streaming_media_cdc_dedup(
-            spark, stream, store, index, checkpoint=f"{ckpt}/b{i}",
+        q = start_batch_stream(
+            stream, f"{ckpt}/b{i}", media_cdc_dedup_batch_against_store, store, index,
             trigger={"availableNow": True},
             threshold=0.5, fmt=fmt,
         )
@@ -1464,8 +1472,8 @@ def test_streaming_fuzzy_decontaminate(spark, tmp_path, fmt_name):
     redelivery of a committed batch is a no-op."""
     from faexport_db_spark.streaming.dedup_stream import (
         fuzzy_decontaminate_batch_against_benchmark,
-        start_streaming_fuzzy_decontaminate,
     )
+    from faexport_db_spark.streaming.microbatch import start_batch_stream
 
     fmt = STORE_FORMATS[fmt_name]()
     src = tmp_path / "src"
@@ -1489,8 +1497,9 @@ def test_streaming_fuzzy_decontaminate(spark, tmp_path, fmt_name):
             str(src / f"b{i}")
         )
         stream = spark.readStream.schema(schema).parquet(str(src / f"b{i}"))
-        q = start_streaming_fuzzy_decontaminate(
-            spark, stream, benchmark, store, checkpoint=f"{ckpt}/b{i}",
+        q = start_batch_stream(
+            stream, f"{ckpt}/b{i}",
+            fuzzy_decontaminate_batch_against_benchmark, benchmark, store,
             trigger={"availableNow": True}, fmt=fmt,
         )
         q.awaitTermination(120)
@@ -1523,8 +1532,8 @@ def test_streaming_bloom_decontaminate(spark, tmp_path, fmt_name):
     committed batch is a no-op; batch parity with the batch API."""
     from faexport_db_spark.streaming.dedup_stream import (
         bloom_decontaminate_batch,
-        start_streaming_bloom_decontaminate,
     )
+    from faexport_db_spark.streaming.microbatch import start_batch_stream
     from faexport_db_spark.training.text import (
         bloom_decontaminate,
         build_bloom_filter,
@@ -1548,13 +1557,14 @@ def test_streaming_bloom_decontaminate(spark, tmp_path, fmt_name):
         [(10, "prefix padding " + bench_text + " suffix padding"),  # embedded leak
          (11, "novel doc two about shuffle partitions and broadcast thresholds")],
     ]
+    words = build_bloom_filter(benchmark, m_bits=m_bits)
     for i, data in enumerate(batches, 1):
         spark.createDataFrame(data, schema).write.mode("overwrite").parquet(
             str(src / f"b{i}")
         )
         stream = spark.readStream.schema(schema).parquet(str(src / f"b{i}"))
-        q = start_streaming_bloom_decontaminate(
-            spark, stream, benchmark, store, checkpoint=f"{ckpt}/b{i}",
+        q = start_batch_stream(
+            stream, f"{ckpt}/b{i}", bloom_decontaminate_batch, words, store,
             m_bits=m_bits, trigger={"availableNow": True}, fmt=fmt,
         )
         q.awaitTermination(120)
@@ -1570,7 +1580,6 @@ def test_streaming_bloom_decontaminate(spark, tmp_path, fmt_name):
     assert batch_kept == ids
 
     # direct-API redelivery no-op via the marker
-    words = build_bloom_filter(benchmark, m_bits=m_bits)
     b = spark.createDataFrame(batches[0], schema)
     out = bloom_decontaminate_batch(
         b, words, store, m_bits=m_bits, batch_id=0, stream_id="d", fmt=fmt
@@ -1586,7 +1595,6 @@ def test_streaming_bloom_decontaminate(spark, tmp_path, fmt_name):
     assert fmt.read(spark, store).count() == n2
 
 
-@pytest.mark.slow
 def test_streaming_hll_register_store(spark, tmp_path):
     """The stream's merged register store equals the one-shot register
     table over everything streamed (merge associativity end-to-end);
@@ -1595,8 +1603,8 @@ def test_streaming_hll_register_store(spark, tmp_path):
     from faexport_db_spark.streaming.sketch_stream import (
         hll_batch_into_store,
         read_hll_store,
-        start_streaming_hll,
     )
+    from faexport_db_spark.streaming.microbatch import start_batch_stream
     from faexport_db_spark.training.pipeline import hll_estimate, hll_register_table
 
     src = tmp_path / "src"
@@ -1612,8 +1620,8 @@ def test_streaming_hll_register_store(spark, tmp_path):
             str(src / f"b{i}")
         )
         stream = spark.readStream.schema(schema).parquet(str(src / f"b{i}"))
-        q = start_streaming_hll(
-            spark, stream, store, checkpoint=f"{ckpt}/b{i}", col="v",
+        q = start_batch_stream(
+            stream, f"{ckpt}/b{i}", hll_batch_into_store, store, col="v",
             trigger={"availableNow": True},
         )
         q.awaitTermination(120)
@@ -1645,8 +1653,8 @@ def test_streaming_kmv_store(spark, tmp_path):
     from faexport_db_spark.streaming.sketch_stream import (
         kmv_batch_into_store,
         read_kmv_store,
-        start_streaming_kmv,
     )
+    from faexport_db_spark.streaming.microbatch import start_batch_stream
     from faexport_db_spark.training.pipeline import kmv_estimate, kmv_sketch
 
     src = tmp_path / "src"
@@ -1662,8 +1670,8 @@ def test_streaming_kmv_store(spark, tmp_path):
             str(src / f"b{i}")
         )
         stream = spark.readStream.schema(schema).parquet(str(src / f"b{i}"))
-        q = start_streaming_kmv(
-            spark, stream, store, checkpoint=f"{ckpt}/b{i}", col="v",
+        q = start_batch_stream(
+            stream, f"{ckpt}/b{i}", kmv_batch_into_store, store, col="v",
             trigger={"availableNow": True},
         )
         q.awaitTermination(120)
@@ -1693,8 +1701,8 @@ def test_streaming_qsketch_store(spark, tmp_path):
     from faexport_db_spark.streaming.sketch_stream import (
         qsketch_batch_into_store,
         read_qsketch_store,
-        start_streaming_qsketch,
     )
+    from faexport_db_spark.streaming.microbatch import start_batch_stream
     from faexport_db_spark.training.pipeline import (
         qsketch_quantile_brackets,
         qsketch_register_table,
@@ -1713,8 +1721,8 @@ def test_streaming_qsketch_store(spark, tmp_path):
             str(src / f"b{i}")
         )
         stream = spark.readStream.schema(schema).parquet(str(src / f"b{i}"))
-        q = start_streaming_qsketch(
-            spark, stream, store, checkpoint=f"{ckpt}/b{i}", value="v",
+        q = start_batch_stream(
+            stream, f"{ckpt}/b{i}", qsketch_batch_into_store, store, value="v",
             trigger={"availableNow": True},
         )
         q.awaitTermination(120)

@@ -40,32 +40,6 @@ def test_minhash_finds_planted_pairs(planted):
     assert all(r["jaccard"] >= 0.6 for r in minhash_dedup_pairs(planted).collect())
 
 
-def test_minhash_arrow_fold_is_bit_exact(spark, sf_small):
-    """The vectorized Arrow MinHash fold must equal the Catalyst
-    ``aggregate`` reference VALUE-FOR-VALUE (xxh.py reproduces Spark's
-    XXH64 long/int operand steps), including NULL text (NULL mins) and
-    empty text (init vector)."""
-    from faexport_db_spark.training.dedup import minhash_signatures
-
-    edge = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "a"),
-            (3, ""),
-            (4, None),
-            (5, "w1 w2 w3 w4 w5 w6 w7 w8 " * 40),
-        ],
-        "doc_id: long, text: string",
-    )
-    docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
-    for frame in (edge, docs):
-        arrow = {r["doc_id"]: r["mins"] for r in
-                 minhash_signatures(frame, impl="arrow").collect()}
-        expr = {r["doc_id"]: r["mins"] for r in
-                minhash_signatures(frame, impl="expr").collect()}
-        assert arrow == expr
-
-
 def test_simhash_exact_consistency(planted):
     """The pigeonhole banding must find EXACTLY the pairs whose true
     signature Hamming distance is within budget — candidates are
@@ -1146,10 +1120,11 @@ def test_streaming_bm25_index_maintenance(spark, sf_small, tmp_path):
     batch 2 appends; the final probe equals a batch build over
     everything."""
     from faexport_db_spark.queries.training_queries import _bm25_queries
+    from faexport_db_spark.streaming.microbatch import start_batch_stream
     from faexport_db_spark.training.retrieval import (
         bm25_build_index,
+        bm25_index_batch,
         bm25_topk_persisted,
-        start_streaming_bm25_index,
     )
 
     docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
@@ -1165,8 +1140,8 @@ def test_streaming_bm25_index_maintenance(spark, sf_small, tmp_path):
         stream = spark.readStream.schema("doc_id bigint, text string").parquet(
             str(src / f"b{i}")
         )
-        q = start_streaming_bm25_index(
-            spark, stream, idx, checkpoint=f"{ckpt}/b{i}",
+        q = start_batch_stream(
+            stream, f"{ckpt}/b{i}", bm25_index_batch, idx,
             trigger={"availableNow": True},
         )
         q.awaitTermination(120)
