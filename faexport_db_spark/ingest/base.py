@@ -37,8 +37,9 @@ def with_dense_ids(df: DataFrame, name: str) -> DataFrame:
     count, making any stride >= rows-per-batch collision-free.
 
     Two map-side passes, no shuffle of the data itself: (1) count rows
-    per partition (a tiny aggregation — one row per partition), (2)
-    broadcast the cumulative offsets back and add the in-partition row
+    per partition (a tiny aggregation — one row per partition), (2) add
+    each partition's cumulative offset — an array literal indexed by
+    partition, so no join or broadcast job — to the in-partition row
     number. This is ``zipWithIndex``'s algorithm kept in DataFrame land
     (no Python RDD round-trip), so it scales to any partition count.
 
@@ -55,21 +56,16 @@ def with_dense_ids(df: DataFrame, name: str) -> DataFrame:
     )
     pid = F.shiftright(F.col("_mid"), _MID_ROW_BITS)
     counts = marked.groupBy(pid.alias("_pid")).agg(F.count("*").alias("_cnt")).collect()
+    starts = [0] * (1 + max((r["_pid"] for r in counts), default=0))
     acc = 0
-    offsets = []
     for row in sorted(counts, key=lambda r: r["_pid"]):
-        offsets.append((row["_pid"], acc))
+        starts[row["_pid"]] = acc
         acc += row["_cnt"]
-    off_df = df.sparkSession.createDataFrame(
-        offsets or [(0, 0)], "_pid bigint, _offset bigint"
-    )
+    offsets = F.expr(f"array({', '.join(map(str, starts))})").cast("array<bigint>")
     row_in_part = F.col("_mid").bitwiseAND(F.lit((1 << _MID_ROW_BITS) - 1))
-    return (
-        marked.withColumn("_pid", pid)
-        .join(F.broadcast(off_df), "_pid")
-        .withColumn(name, (F.col("_offset") + row_in_part).cast("bigint"))
-        .drop("_mid", "_pid", "_offset")
-    )
+    return marked.withColumn(
+        name, (offsets[pid] + row_in_part).cast("bigint")
+    ).drop("_mid")
 
 KEYWORD_ARRAY = "array<struct<ordinal:int,keyword:string>>"
 HASH_ARRAY = "array<struct<algo_id:bigint,hash_value:binary>>"
@@ -115,9 +111,12 @@ def unordered_keywords(arr: F.Column) -> F.Column:
 def explode_to_store(nested: DataFrame) -> dict[str, DataFrame]:
     """Nested snapshots → relational store tables (parent + 3 children)
     with consistent minted DENSE ids (0..n-1 per table, see
-    ``with_dense_ids``). Map-only except the persist barrier and the
-    per-partition count jobs."""
-    with_ids = with_dense_ids(nested, "submission_snapshot_id").persist()
+    ``with_dense_ids``). Map-only except the checkpoint barriers and
+    the per-partition count jobs. The frames read more than once are
+    pinned with ``localCheckpoint``, not ``persist()``, for the reason
+    ``with_dense_ids`` gives: this runs once per push and per ingest
+    micro-batch, and CacheManager entries are never released."""
+    with_ids = with_dense_ids(nested, "submission_snapshot_id").localCheckpoint()
 
     snapshots = with_ids.select(
         "submission_snapshot_id",
@@ -148,7 +147,7 @@ def explode_to_store(nested: DataFrame) -> dict[str, DataFrame]:
     files_flat = with_dense_ids(
         with_ids.select("submission_snapshot_id", F.explode("files").alias("f")),
         "file_id",
-    ).persist()
+    ).localCheckpoint()
     files = files_flat.select(
         "file_id",
         "submission_snapshot_id",

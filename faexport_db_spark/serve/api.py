@@ -2,13 +2,19 @@
 
 Each function takes the store — ``tables: Mapping[str, DataFrame]`` keyed
 per ``datamodel.schemas.FAEXPORT_SCHEMAS`` — and restates one route's
-query lifecycle (SURVEY.md §3.1) as a single Spark plan:
+query lifecycle (SURVEY.md §3.1) as Spark plans:
 
-- Point lookups (view_submission, view_user, hash search) **filter the
-  snapshot scan first**, so partition pruning on ``website_id`` and
+- Point lookups (view_submission, view_user, hash search) run a
+  **prepared plan**: the route's store-wide merge/attach plan is built
+  once per store version (``_prepared``) and each call only binds its
+  key — a filter for the entity views, a broadcast semi join for hash
+  search. Catalyst pushes that key below the aggregates and joins down
+  to the snapshot scans, so partition pruning on ``website_id`` and
   row-group pruning on the site id happen before any join/shuffle —
   the Spark analog of the reference's covering indexes
-  (reference: faexport_db/schema/indexes.sql:10-11,21).
+  (reference: faexport_db/schema/indexes.sql:10-11,21). Building the
+  merge plan costs thousands of Python→JVM calls; binding a key costs
+  a few dozen.
 - Child attach is one nested aggregation, not the reference's N+1
   IN-list round-trips (reference: faexport_db/models/submission.py:149-168).
 - Listing/count endpoints return DataFrames (distributed; caller limits
@@ -75,24 +81,48 @@ def _entity_filter(df: DataFrame, website_id: str, id_col: str, site_id: str) ->
     )
 
 
+# route -> (the input frames its plan was built from, the plan)
+_PLANS: dict[str, tuple[tuple, DataFrame]] = {}
+
+
+def _prepared(route: str, tables: Tables, names: tuple[str, ...], build) -> DataFrame:
+    """``build(*inputs)`` over ``tables``' frames named ``names``, built
+    once per store version: the plan is reused while every input is the
+    very object (``is``) it was built from. A re-read table is a new
+    object, so the next call rebuilds. Holding the inputs keeps their
+    ids from being reused. One plan per route; no lock — a race builds
+    the plan twice, and both copies are correct."""
+    inputs = tuple(tables.get(n) for n in names)
+    held = _PLANS.get(route)
+    if held is None or any(a is not b for a, b in zip(held[0], inputs)):
+        held = (inputs, build(*inputs))
+        _PLANS[route] = held
+    return held[1]
+
+
+_SUBMISSION_TABLES = (
+    "submission_snapshots",
+    "submission_snapshot_keywords",
+    "submission_snapshot_files",
+    "submission_snapshot_file_hashes",
+)
+
+
 def view_submission(
     tables: Tables, website_id: str, site_submission_id: str
 ) -> dict | None:
     """GET /api/view/submissions/<site>/<id>.json (web.py:68-78).
 
-    Filter → merge → assemble: the merge aggregation only ever sees the
-    one entity's snapshots because the compound-key filter sits below it
-    in the plan (pushed to the parquet scan).
+    Merge → filter → assemble: the store-wide ``merged_submissions`` plan
+    is prepared once per store version and each call filters it on the
+    compound key. Catalyst pushes that filter through the aggregate and
+    the files left join into both ``submission_snapshots`` scans (the
+    ``website_id`` partition filter and the ``site_submission_id``
+    equality), so the merge only ever sees the one entity's snapshots
+    (tests/test_serve.py guards the pushdown).
     """
-    snaps = _entity_filter(
-        tables["submission_snapshots"], website_id, "site_submission_id", site_submission_id
-    )
-    merged = merged_submissions(
-        snaps,
-        keywords=tables.get("submission_snapshot_keywords"),
-        files=tables.get("submission_snapshot_files"),
-        file_hashes=tables.get("submission_snapshot_file_hashes"),
-    )
+    merged = _prepared("view_submission", tables, _SUBMISSION_TABLES, merged_submissions)
+    merged = _entity_filter(merged, website_id, "site_submission_id", site_submission_id)
     row = merged.first()
     if row is None:
         return None
@@ -135,11 +165,11 @@ def view_submission(
 
 
 def view_user(tables: Tables, website_id: str, site_user_id: str) -> dict | None:
-    """GET /api/view/users/<site>/<id>.json (web.py:112-122)."""
-    snaps = _entity_filter(
-        tables["user_snapshots"], website_id, "site_user_id", site_user_id
-    )
-    row = merged_users(snaps).first()
+    """GET /api/view/users/<site>/<id>.json (web.py:112-122); the
+    prepared ``merged_users`` plan filtered on the key, as in
+    ``view_submission``."""
+    merged = _prepared("view_user", tables, ("user_snapshots",), merged_users)
+    row = _entity_filter(merged, website_id, "site_user_id", site_user_id).first()
     if row is None:
         return None
     return {
@@ -453,6 +483,9 @@ def search_hash(tables: Tables, algo_id: int, hash_value: bytes) -> list[dict]:
     file_hashes scan; the snapshot side is reached through two
     ascending joins, then children attach once for the matched set —
     not per-snapshot as the reference does (models/submission.py:416-431).
+    The attach plan is prepared once per store version; each call semi
+    joins the broadcast matches onto it, and Spark pushes that semi
+    join below the child left joins, down to the snapshot scan.
     """
     matches = (
         tables["submission_snapshot_file_hashes"]
@@ -462,11 +495,14 @@ def search_hash(tables: Tables, algo_id: int, hash_value: bytes) -> list[dict]:
         .select("submission_snapshot_id")
         .distinct()
     )
-    snaps = tables["submission_snapshots"].join(
-        F.broadcast(matches), "submission_snapshot_id", "left_semi"
+    nested = _prepared(
+        "search_hash",
+        tables,
+        (*_SUBMISSION_TABLES, "archive_contributors"),
+        lambda snaps, *_: _nested_submission_snapshots(tables, snaps),
     )
     rows = (
-        _nested_submission_snapshots(tables, snaps)
+        nested.join(F.broadcast(matches), "submission_snapshot_id", "left_semi")
         .orderBy("submission_snapshot_id")
         .collect()
     )

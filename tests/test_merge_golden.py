@@ -72,7 +72,6 @@ def test_file_clash_reset(merged):
     assert main["extra_data"] is None  # clash also resets extra_data
 
 
-@pytest.mark.slow
 def test_file_union_before_clash(spark):
     # restrict history to snapshots 1-2: no clash ⇒ hash union + extra merge
     snaps = submission_snapshots(spark).filter(F.col("submission_snapshot_id") <= 2)

@@ -52,7 +52,6 @@ def test_authenticate_contributor(store):
     assert serve.authenticate_contributor(store, "bad") is None
 
 
-@pytest.mark.slow
 def test_view_submission_merged(store):
     data = serve.view_submission(store, "fa", "101")
     assert data["cache_data"]["snapshot_count"] == 3
@@ -70,6 +69,108 @@ def test_view_submission_merged(store):
     (main,) = sub["files"]
     assert main["file_url"] == "http://a/2.png"
     assert [h["algo_id"] for h in main["file_hashes"]] == [1]
+
+
+def _scans(plan):
+    """Every FileSourceScanExec in an executed plan, through adaptive
+    query stages."""
+    kind = plan.getClass().getSimpleName()
+    if kind == "FileSourceScanExec":
+        yield plan
+    if kind == "AdaptiveSparkPlanExec":
+        yield from _scans(plan.finalPhysicalPlan())
+    elif kind.endswith("QueryStageExec"):
+        yield from _scans(plan.plan())
+    else:
+        children = plan.children()
+        for i in range(children.size()):
+            yield from _scans(children.apply(i))
+
+
+def test_prepared_view_pushes_key_into_every_snapshot_scan(spark, store, tmp_path):
+    # The prepared merge plan is store-wide; only Catalyst's pushdown of
+    # the per-call key filter keeps a view from merging the whole store.
+    tables = {}
+    for name in serve.api._SUBMISSION_TABLES:
+        path = str(tmp_path / name)
+        writer = store[name].write
+        if name == "submission_snapshots":
+            writer = writer.partitionBy("website_id")
+        writer.parquet(path)
+        tables[name] = spark.read.parquet(path)
+    merged = serve.api._prepared(
+        "view_submission", tables, serve.api._SUBMISSION_TABLES, serve.api.merged_submissions
+    )
+    view = serve.api._entity_filter(merged, "fa", "site_submission_id", "101")
+    assert view.first()["snapshot_count"] == 3
+    scans = [
+        s
+        for s in _scans(view._jdf.queryExecution().executedPlan())
+        if s.relation().location().rootPaths().apply(0).getName() == "submission_snapshots"
+    ]
+    assert len(scans) == 2  # the scalar merge and the M7 file fold
+    for scan in scans:
+        partition_filters = scan.partitionFilters().mkString(" ")
+        assert "(website_id#" in partition_filters and "= fa)" in partition_filters
+        assert "EqualTo(site_submission_id,101)" in scan.pushedDownFilters().mkString(" ")
+
+
+def test_prepared_plans_follow_store_versions(spark, store):
+    payload = json.dumps(
+        {
+            "website_id": "weasyl",
+            "site_submission_id": "W88",
+            "scan_datetime": "2024-05-01T00:00:00",
+            "title": "versioned",
+            "ordered_keywords": ["v"],
+            "files": [
+                {
+                    "site_file_id": "main",
+                    "file_url": "http://w/v.png",
+                    "file_hashes": [{"algo_id": 1, "hash_value": fx.b64(b"\x88\x88")}],
+                }
+            ],
+        }
+    )
+    assert serve.view_submission(store, "weasyl", "W88") is None
+    assert serve.search_hash(store, 1, b"\x88\x88") == []
+    pushed = serve.push_ingest(
+        store, spark.createDataFrame([(payload,)], "payload string"),
+        contributor_id=1, format="submission",
+    )
+    assert serve.view_submission(pushed, "weasyl", "W88")["submission_data"]["title"] == "versioned"
+    [hit] = serve.search_hash(pushed, 1, b"\x88\x88")
+    assert hit["site_submission_id"] == "W88"
+    # the old store version still answers as it did
+    assert serve.view_submission(store, "weasyl", "W88") is None
+    assert serve.search_hash(store, 1, b"\x88\x88") == []
+
+    newer = spark.createDataFrame(
+        [(99, "weasyl", "w99", fx.T2, 1, fx.TI, False, "W99", None)],
+        store["user_snapshots"].schema,
+    )
+    assert serve.view_user(store, "weasyl", "w99") is None
+    replaced = dict(store, user_snapshots=store["user_snapshots"].unionByName(newer))
+    assert serve.view_user(replaced, "weasyl", "w99")["user_data"]["display_name"] == "W99"
+    assert serve.view_user(store, "weasyl", "w99") is None
+
+
+def test_repeated_view_reuses_the_prepared_plan(store, monkeypatch):
+    # Building merged_submissions costs ~3,400 Python->JVM commands; a
+    # view on an unchanged store only binds its key to the prepared plan.
+    from py4j.clientserver import ClientServerConnection
+
+    serve.view_submission(store, "fa", "102")
+    sent = []
+    real = ClientServerConnection.send_command
+
+    def counting(self, command):
+        sent.append(command)
+        return real(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    assert serve.view_submission(store, "fa", "101")["cache_data"]["snapshot_count"] == 3
+    assert 0 < len(sent) < 300
 
 
 def test_view_submission_missing(store):
@@ -197,6 +298,21 @@ def test_push_ingest_appends_with_consistent_ids(spark, store):
         .collect()
     )
     assert all(r[0] > old_max for r in new_ids)
+
+
+def test_push_ingest_leaves_no_cache_entries(spark, store):
+    # explode_to_store runs once per push and per ingest micro-batch;
+    # a persist() there would leave CacheManager entries no one releases.
+    payload = json.dumps(
+        {"website_id": "weasyl", "site_submission_id": "W55", "scan_datetime": "2024-04-02T00:00:00",
+         "ordered_keywords": ["a"], "files": [{"site_file_id": "main", "file_url": "http://w/c.png"}]}
+    )
+    out = serve.push_ingest(
+        store, spark.createDataFrame([(payload,)], "payload string"),
+        contributor_id=1, format="submission",
+    )
+    assert out["submission_snapshot_files"].count() == store["submission_snapshot_files"].count() + 1
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_snapshot_dump_jsonl(spark, store, tmp_path):
